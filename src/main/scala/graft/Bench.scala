@@ -101,18 +101,14 @@ object Bench {
     // arithmetic its consumers pay), so count-stamped floors certified work
     // that never executed. All BASELINE.md floors are re-stamped on the
     // noop action in the same commit as this switch; the old count-action
-    // numbers are kept in OPTIMIZATION_r17.md. SPARK_GRAFT_BENCH_ACTION=
-    // count preserves the old action for cross-methodology A/B runs.
-    val countAction = sys.env.get("SPARK_GRAFT_BENCH_ACTION").contains("count")
+    // numbers are kept in OPTIMIZATION_r17.md.
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       rebuild.get(name).foreach(_.apply())
       val t0 = System.nanoTime()
       // a crashing query must NOT report its time-to-fail as a legitimate
       // timing: mark the run negative and log to stderr
       val ok = try {
-        val df = fn(spark, sfDir)
-        if (countAction) df.count()
-        else df.write.format("noop").mode("overwrite").save()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         true
       } catch {
         case e: Throwable =>

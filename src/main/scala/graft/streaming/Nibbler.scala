@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.util.concurrent.{CancellationException, ExecutionException, Executors, ExecutorService, FutureTask, ScheduledExecutorService, TimeUnit}
+import java.util.concurrent.{CancellationException, CountDownLatch, ExecutionException, Executors, ExecutorService, FutureTask, ScheduledExecutorService, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.mutable.ArrayBuffer
@@ -76,33 +76,15 @@ final case class NibblerConfig[T](
     processingTimeout: Duration = Duration.Zero,
     resumeAfterErr: Boolean = false,
     onError: (Seq[T], Throwable) => Unit = null,
-    ctxProcessor: (BatchContext, Trigger, Seq[T]) => Unit = null,
-    /** Receiver backpressure bound — the reference's `make(chan T,
-      * cfg.Size)` (nibbler.go:184): producers BLOCK once this many
-      * pushed items are un-drained (push/pushAll are channel sends, not
-      * unbounded buffering — a producer that pushes more than this
-      * before start() blocks until the listen loop drains). <= 0 means
-      * the reference default, capacity = size; values above
-      * Int.MaxValue/4 are clamped (Semaphore overflow guard).
-      */
-    receiverCapacity: Int = 0) {
+    ctxProcessor: (BatchContext, Trigger, Seq[T]) => Unit = null) {
 
-  def sanitized: NibblerConfig[T] = {
-    val sz = if (size <= 0) Nibbler.DefaultSize else size
+  def sanitized: NibblerConfig[T] =
     copy(
-      size = sz,
+      size = if (size <= 0) Nibbler.DefaultSize else size,
       tickerDuration =
         if (tickerDuration < 1.milli) Nibbler.DefaultTicker else tickerDuration,
       processingTimeout =
-        if (processingTimeout < 1.milli) Nibbler.DefaultTimeout else processingTimeout,
-      // clamp: closeReceiver releases Int.MaxValue/2 permits to wake
-      // blocked producers; a capacity above Int.MaxValue/4 could overflow
-      // the Semaphore's permit count on that release (Semaphore.release
-      // throws Error past Int.MaxValue total permits)
-      receiverCapacity =
-        if (receiverCapacity <= 0) sz
-        else math.min(receiverCapacity, Int.MaxValue / 4))
-  }
+        if (processingTimeout < 1.milli) Nibbler.DefaultTimeout else processingTimeout)
 
   def validate(): Unit = {
     if (processor == null && ctxProcessor == null)
@@ -152,38 +134,39 @@ final class Nibbler[T: Encoder](spark: SparkSession, rawCfg: NibblerConfig[T]) {
   private val worker: ExecutorService = Executors.newSingleThreadExecutor(r => {
     val t = new Thread(r, "nibbler-processor"); t.setDaemon(true); t
   })
-  /** The latest processor invocation. `task.get` alone can't be used to
-    * wait out a STALE invocation: FutureTask.cancel flips get() to throw
-    * immediately while the runnable keeps executing — `done` only counts
-    * down when the runnable actually returns.
+  /** Released when the latest processor invocation has left the worker.
+    * `FutureTask.get` can't be used to wait out a STALE invocation:
+    * cancel flips get() to throw immediately while the runnable keeps
+    * executing.
     */
-  private final class Invocation(val task: FutureTask[Unit], val done: java.util.concurrent.CountDownLatch)
-  @volatile private var inFlight: Invocation = null
+  @volatile private var inFlight: CountDownLatch = null
 
   /** Backpressure permits — the reference's buffered channel capacity
     * (`make(chan T, cfg.Size)`, nibbler.go:184): a producer blocks once
-    * `receiverCapacity` pushed items are un-drained (not yet received by
-    * the listen loop's foreachBatch); the drain releases them. Closed
-    * exactly once on stop so blocked producers wake and observe the
-    * closed receiver instead of hanging.
+    * `size` pushed items are un-drained (not yet received by the listen
+    * loop's foreachBatch); the drain releases them. Closed exactly once on
+    * stop so blocked producers wake and observe the closed receiver
+    * instead of hanging. The capacity is clamped to Int.MaxValue/4:
+    * closeReceiver releases Int.MaxValue/2 permits, and Semaphore.release
+    * throws past Int.MaxValue total permits.
     */
-  private val permits = new java.util.concurrent.Semaphore(cfg.receiverCapacity)
+  private val permits = new java.util.concurrent.Semaphore(math.min(cfg.size, Int.MaxValue / 4))
   private val receiverClosed = new AtomicBoolean(false)
   private def closeReceiver(): Unit =
     if (receiverClosed.compareAndSet(false, true))
       permits.release(Int.MaxValue / 2)
 
   /** Push one item (reference `Receiver()`, nibbler.go:120-122). BLOCKS
-    * once `receiverCapacity` pushed items are un-drained (channel-send
-    * semantics, see [[pushAll]]) — in particular, pushing more than
-    * `receiverCapacity` items before [[start]] blocks until started.
+    * once `size` pushed items are un-drained (channel-send semantics,
+    * see [[pushAll]]) — in particular, pushing more than `size` items
+    * before [[start]] blocks until started.
     * Throws [[Nibbler.ReceiverClosedException]] once the nibbler has
     * stopped after a non-resumable failure — the analog of "send on
     * closed channel".
     */
   def push(item: T): Unit = pushAll(Seq(item))
 
-  /** Push items, BLOCKING per item once `receiverCapacity` are un-drained
+  /** Push items, BLOCKING per item once `size` are un-drained
     * (the reference's channel-send semantics — a fast producer cannot
     * queue without bound). Items accepted before the block are in the
     * stream, exactly like a partially-completed sequence of channel sends.
@@ -262,22 +245,21 @@ final class Nibbler[T: Encoder](spark: SparkSession, rawCfg: NibblerConfig[T]) {
     // clock measures actual processing) — the reference's listen loop
     // likewise blocks until Processor returns, however late.
     val prev = inFlight
-    if (prev != null) {
-      try prev.task.get()
-      catch { case _: InterruptedException => (); case NonFatal(_) => () }
-      prev.done.await()
-    }
+    if (prev != null) prev.await()
     val slice = carry.take(n).toVector
     val ctx = new BatchContext(System.nanoTime() + cfg.processingTimeout.toNanos)
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val task = new FutureTask[Unit](() => {
-      try {
-        if (cfg.ctxProcessor != null) cfg.ctxProcessor(ctx, trigger, slice)
-        else cfg.processor(trigger, slice)
-      } finally done.countDown()
-    })
+    val exited = new CountDownLatch(1)
+    // Count down in run(), not in the callable: a task cancelled on
+    // timeout before the worker picked it up never runs its callable, but
+    // the executor still calls run() — otherwise the next flush would
+    // wait on `exited` forever while holding `lock`.
+    val task = new FutureTask[Unit](() =>
+      if (cfg.ctxProcessor != null) cfg.ctxProcessor(ctx, trigger, slice)
+      else cfg.processor(trigger, slice)) {
+      override def run(): Unit = try super.run() finally exited.countDown()
+    }
     worker.execute(task)
-    inFlight = new Invocation(task, done)
+    inFlight = exited
     val result =
       try {
         task.get(cfg.processingTimeout.toNanos, TimeUnit.NANOSECONDS)

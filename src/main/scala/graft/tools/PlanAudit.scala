@@ -550,7 +550,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val spark = graft.GraftSession.local(8)
+    val spark = graft.GraftSession.local()
     val allowed = allowedBnlj
     var flagged = 0
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

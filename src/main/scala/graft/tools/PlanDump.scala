@@ -2,8 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-/** Dump explain("formatted") for a list of queries to files in one JVM —
-  * the plans/rNN before/after evidence capture.
+/** Dump explain("formatted") of the bench spelling of each named query to
+  * files in one JVM — the plans/rNN before/after evidence capture, or a
+  * look at codegen boundaries and pushdown.
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> <query> [query ...]
   * Writes <outDir>/<query>_<suffix>.txt for each query (sf dir from
   * SPARK_GRAFT_SF_DIR, default sf0.01 — plan shape, not timing).
@@ -15,7 +16,7 @@ object PlanDump {
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     Files.createDirectories(outDir)
-    val spark = graft.GraftSession.local(sys.env.getOrElse("EXPLAIN_CPUS", "8").toInt)
+    val spark = graft.GraftSession.local()
     names.foreach { name =>
       val df = graft.SparkEntry.benchQueries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(

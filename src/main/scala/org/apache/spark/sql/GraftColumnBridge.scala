@@ -10,12 +10,4 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** Diagnostic-only bridge (tools/Scratch): a DataFrame over an
-    * arbitrary logical plan, e.g. a query with its trailing Sort
-    * stripped, to isolate the range-exchange sampling cost.
-    */
-  def ofRows(spark: SparkSession,
-      plan: catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.sys.process.{Process, ProcessLogger}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The stdout bench line is the driver's ONLY channel for the round's
@@ -49,5 +53,27 @@ class BenchLineSpec extends AnyFunSuite {
     assert(line.length <= 1900)
     assert(parseable(line))
     assert(line.contains("BENCH_DETAIL.json"))
+  }
+
+  test("the regression gate grades a full-name artifact: a planted 2x regression exits 1") {
+    val floor = """\|\s*(\S+)\s*\|\s*([0-9.]+)\s*\|.*""".r
+    val floors = Files.readString(Paths.get("BASELINE.md")).linesIterator.collect {
+      case floor(q, t) if q != "query" => q -> t.toDouble
+    }.toMap
+    val names = SparkEntry.benchQueries.keys.toSeq.sorted
+    assert(names.size == floors.size && names.forall(n => floors.contains(n.takeWhile(_ != '_'))))
+    def grade(planted: Option[String]): Int = {
+      val results = names.map { n =>
+        val f = floors(n.takeWhile(_ != '_'))
+        n -> (if (planted.contains(n)) 2 * f else f)
+      }
+      val artifact = Files.createTempFile("bench-full", ".json")
+      try {
+        Files.writeString(artifact, Bench.renderFullLine(results, 0, "sf0.1"))
+        Process(Seq("python3", "tools/benchcompare.py", artifact.toString)).!(ProcessLogger(_ => ()))
+      } finally Files.delete(artifact)
+    }
+    assert(grade(Some("d10_containment")) == 1)
+    assert(grade(None) == 0)
   }
 }

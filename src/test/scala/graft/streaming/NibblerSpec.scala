@@ -214,6 +214,30 @@ class NibblerSpec extends SparkSpec {
     nib.stop()
   }
 
+  test("a timeout that cancels a not-yet-started invocation does not wedge later flushes") {
+    // size 1 and a 1 ms timeout: some flushes time out before the worker
+    // thread has even started the task, so cancel(true) wins and the
+    // processor never runs. Every item must still be accounted for, by
+    // the processor or the error callback, and stop() must return.
+    val n = 200
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val nib = Nibbler.start(spark, NibblerConfig[Int](
+      processor = (_, b) => b.foreach(seen.add),
+      size = 1,
+      tickerDuration = 200.millis,
+      processingTimeout = 1.milli,
+      resumeAfterErr = true,
+      onError = (b, _) => b.foreach(seen.add)))
+    val producer = new Thread(() => (0 until n).foreach(i => nib.push(i)), "timeout-producer")
+    producer.setDaemon(true)
+    producer.start()
+    val deadline = System.nanoTime() + 60.seconds.toNanos
+    while (seen.size < n && System.nanoTime() < deadline) Thread.sleep(20)
+    val drained = seen.size
+    assert(drained == n, s"only $drained of $n items drained within 60 s")
+    nib.stop()
+  }
+
   test("validation rejects setting both processor flavors") {
     intercept[Nibbler.ValidationException] {
       new Nibbler[String](spark, NibblerConfig[String](
@@ -299,13 +323,6 @@ class NibblerSpec extends SparkSpec {
     assert(cfg.size == 100)
     assert(cfg.tickerDuration == 1.minute)
     assert(cfg.processingTimeout == 1.second)
-    // receiver capacity defaults to size — the reference's buffered
-    // channel bound (make(chan T, cfg.Size), nibbler.go:184)
-    assert(cfg.receiverCapacity == 100)
-    assert(NibblerConfig[String](processor = (_, _) => (), size = 7)
-      .sanitized.receiverCapacity == 7)
-    assert(NibblerConfig[String](processor = (_, _) => (), size = 7,
-      receiverCapacity = 500).sanitized.receiverCapacity == 500)
     val explicit = NibblerConfig[String](
       processor = (_, _) => (), size = 10,
       tickerDuration = 1.second, processingTimeout = 1.minute).sanitized

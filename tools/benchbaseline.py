@@ -13,6 +13,8 @@ Usage:
   python3 tools/benchbaseline.py [extra_bench.json ...] > /dev/null
 Rewrites BASELINE.md in place. Extra files are raw Bench stdout JSON
 ({"metric":..., "queries": {...}}) from clean-machine runs.
+Exits 2, leaving BASELINE.md untouched, when two query names fold to the
+same short baseline key.
 """
 import json
 import glob
@@ -44,26 +46,39 @@ PINNED = {
 NOOP_ERA_FIRST_ROUND = 17
 
 
+def fold_names(qs):
+    """Fold {query name: time} to the short (pre-underscore) baseline key.
+    Full names ("d10_containment") and short ones ("d10") both fold; two
+    names that fold to the same key are an error, since one would silently
+    shadow the other."""
+    out, origin = {}, {}
+    for name, t in qs.items():
+        key = name.split("_")[0]
+        if key in out:
+            raise ValueError(f"query names {origin[key]!r} and {name!r} "
+                             f"both fold to baseline key {key!r}")
+        out[key], origin[key] = t, name
+    return out
+
+
 def decode_queries(qs):
     # r13+: the driver stamps parsed.queries as a POINTER to the detail
-    # artifact ({"runs": {long_name: [pass1, ...]}}); fold to
-    # best-of-passes under the short (pre-underscore) baseline key.
-    # Accept a JSON-encoded object string too.
+    # artifact ({"runs": {long_name: [pass1, ...]}}); grade best-of-passes.
+    # Accept a JSON-encoded object string too. r17+: the
+    # SPARK_GRAFT_BENCH_OUT artifact carries FULL query names.
     if isinstance(qs, str):
         detail = os.path.join(ROOT, qs)
         if os.path.exists(detail):
             runs = json.load(open(detail)).get("runs") or {}
-            return {name.split("_")[0]: min(ts) for name, ts in runs.items()
-                    if isinstance(ts, list) and ts} or None
+            return fold_names({name: min(ts) for name, ts in runs.items()
+                               if isinstance(ts, list) and ts}) or None
         try:
             qs = json.loads(qs)
         except ValueError:
             return None
     if not isinstance(qs, dict):
         return None
-    # r17+: the SPARK_GRAFT_BENCH_OUT artifact carries FULL query names
-    # (the restored per-query channel); fold to the short baseline key.
-    return {name.split("_")[0]: t for name, t in qs.items()}
+    return fold_names(qs)
 
 
 def load_rounds():
@@ -168,4 +183,8 @@ def main(extra):
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:])
+    try:
+        main(sys.argv[1:])
+    except ValueError as e:
+        print(f"ERROR: {e}", file=sys.stderr)
+        sys.exit(2)

@@ -7,12 +7,15 @@ Regression rule (the r10/r11 triage thresholds, now mechanical):
   time > 1.5x floor AND time - floor > 0.4s.
 New queries (no floor yet) are listed separately — stamp them into the
 baseline with tools/benchbaseline.py once a clean run exists.
-Exit code: 0 clean, 1 regressions found, 2 usage/parse error.
+Exit code: 0 clean, 1 regressions found, 2 usage/parse error (including
+two query names that fold to the same baseline key).
 """
 import json
 import os
 import re
 import sys
+
+from benchbaseline import decode_queries
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -32,22 +35,11 @@ def load_floors():
 
 def main(path):
     d = json.load(open(path))
-    qs = d.get("queries") or (d.get("parsed") or {}).get("queries")
-    if isinstance(qs, str):
-        # r13: the driver stamps parsed.queries as a POINTER to the
-        # detail artifact ({"runs": {long_name: [pass1, pass2, ...]}});
-        # grade best-of-passes under the short (pre-underscore) key the
-        # baseline uses. Accept a JSON-encoded object too.
-        detail = os.path.join(ROOT, qs)
-        if os.path.exists(detail):
-            runs = json.load(open(detail)).get("runs") or {}
-            qs = {name.split("_")[0]: min(ts) for name, ts in runs.items()
-                  if isinstance(ts, list) and ts}
-        else:
-            try:
-                qs = json.loads(qs)
-            except ValueError:
-                qs = None
+    try:
+        qs = decode_queries(d.get("queries") or (d.get("parsed") or {}).get("queries"))
+    except ValueError as e:
+        print(f"ERROR: {e}")
+        return 2
     if not qs:
         print(f"ERROR: no queries in {path} (parsed=null?)")
         return 2
