@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   *     aggregates stay inside whole-stage codegen;
   *   - UTC + no UI for deterministic, headless runs;
   *   - [[GraftExtensions]] applied, so the SQL surface (cosine_sim,
-  *     rhp_bucket, minhash_sig, ...) is available in every session.
+  *     rhp_bucket, minhash_sig, ...) is available in every session;
+  *   - [[graft.streaming.LocalCheckpointFileManager]] as the streaming
+  *     checkpoint manager.
   */
 object GraftSession {
 
@@ -43,6 +45,11 @@ object GraftSession {
       // local[32]-only constant.
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+      // streaming offset and commit logs on file: paths are written with
+      // java.nio instead of Hadoop's local filesystem, which forks chmod
+      // and readlink per write without libhadoop (~90 ms per micro-batch)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
       .withExtensions(new GraftExtensions)
 
   /** Local session with `cores` threads; `cores` defaults to the

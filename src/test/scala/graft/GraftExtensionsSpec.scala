@@ -7,7 +7,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
   test("cosine_sim resolves as a SQL function via GraftExtensions") {
     // Extensions apply only at session build time; clear the default so
     // getOrCreate builds a fresh session (reusing the JVM's SparkContext)
-    // instead of returning the shared extension-less test session.
+    // instead of returning the shared test session, which already has
+    // them through GraftSession.builder.
     val prev = SparkSession.getDefaultSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()

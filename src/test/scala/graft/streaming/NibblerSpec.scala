@@ -318,6 +318,46 @@ class NibblerSpec extends SparkSpec {
       "blocked producer must observe the closed receiver on stop")
   }
 
+  test("a micro-batch runs as one Spark task, however many pushes it holds") {
+    // MemoryStream plans one input partition per addData call unless its
+    // partition count is set, and pushAll calls addData once per item.
+    // Pushing 50 single items before start puts all 50 in the first
+    // micro-batch: 50 tasks for that batch, unless the stream is planned
+    // as one partition.
+    val batches = new ConcurrentLinkedQueue[(Trigger, Seq[Int])]()
+    val nib = new Nibbler[Int](spark, NibblerConfig[Int](
+      processor = (t, b) => { batches.add((t, b)); () },
+      size = 50,
+      tickerDuration = 10.minutes,
+      processingTimeout = 5.seconds))
+    val queryName = s"nibbler-${System.identityHashCode(nib)}\n"
+    val tasksByBatch = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { props =>
+          val desc = props.getProperty("spark.job.description")
+          if (desc != null && desc.startsWith(queryName))
+            tasksByBatch.merge(String.valueOf(props.getProperty("streaming.sql.batchId")),
+              e.stageInfos.map(_.numTasks).sum, (a: Int, b: Int) => a + b)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      (1 to 50).foreach(i => nib.push(i))
+      nib.start()
+      nib.processAllAvailable()
+      val deadline = System.nanoTime() + 10.seconds.toNanos
+      while ((batches.isEmpty || tasksByBatch.isEmpty) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      nib.stop()
+      Thread.sleep(200) // let the listener bus deliver any late job events
+      assert(batches.asScala.toVector == Vector((Trigger.BatchFull, (1 to 50).toVector)))
+      val tasks = tasksByBatch.asScala.toMap
+      assert(tasks.nonEmpty, "no job of the nibbler's query was observed")
+      assert(tasks.values.forall(_ <= 1), s"tasks per micro-batch: $tasks")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("config sanitize applies the reference defaults") {
     val cfg = NibblerConfig[String](processor = (_, _) => ()).sanitized
     assert(cfg.size == 100)
